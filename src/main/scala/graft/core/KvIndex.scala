@@ -154,23 +154,29 @@ final case class KvModel(
     * x_index_lifecycle phase profile measured the sequential collects
     * at 1.3 s warm, the row's single biggest phase. Submitting them
     * from a thread pool overlaps the latencies (Spark's scheduler runs
-    * concurrent jobs fine; job-description props are thread-local).
-    * Each map's CONTENT is untouched — same Spark-computed tables,
-    * same rows — so compiled ≡ join parity (KvProbeSpec) is unchanged. */
+    * concurrent jobs fine). The pool is created per call, so its
+    * threads are spawned by the caller's thread and inherit its Spark
+    * local properties (job group, description, scheduler pool); a
+    * shared pool's threads would keep whatever properties they
+    * inherited when first created. Each map's CONTENT is untouched —
+    * same Spark-computed tables, same rows — so compiled ≡ join parity
+    * (KvProbeSpec) is unchanged. */
   def toLocalScorer: LocalScorer = {
-    import scala.concurrent.{Await, Future}
+    import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    implicit val ec: scala.concurrent.ExecutionContext =
-      scala.concurrent.ExecutionContext.global
-    val kvF = Future(kv.select(col("key"), col("value"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
-    val pfxFs = prefixes.map { case (l, t) =>
-      Future(l -> t.select(col("prefix"), col("value"))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(1 + prefixes.length)
+    try {
+      implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+      val kvF = Future(kv.select(col("key"), col("value"))
         .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
-    }
-    val kvMap = Await.result(kvF, Duration.Inf)
-    val pfxMaps = pfxFs.map(Await.result(_, Duration.Inf))
-    LocalScorer(kvMap, pfxMaps, globalValue)
+      val pfxFs = prefixes.map { case (l, t) =>
+        Future(l -> t.select(col("prefix"), col("value"))
+          .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap)
+      }
+      val kvMap = Await.result(kvF, Duration.Inf)
+      val pfxMaps = pfxFs.map(Await.result(_, Duration.Inf))
+      LocalScorer(kvMap, pfxMaps, globalValue)
+    } finally pool.shutdown()
   }
 }
 

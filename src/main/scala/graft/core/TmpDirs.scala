@@ -19,11 +19,15 @@ object TmpDirs {
     * spark-warehouse/ dir into the working directory. */
   def warehouseDir: String = root.resolve("warehouse").toString
 
+  /** The directory [[scratch]] hands out for (name, key), untouched. */
+  def dir(name: String, key: String): String =
+    root.resolve(s"${name}_${Integer.toHexString(key.hashCode)}").toString
+
   def scratch(name: String, key: String): String = {
-    val dir = root.resolve(s"${name}_${Integer.toHexString(key.hashCode)}")
-    deleteRecursively(dir)
-    Files.createDirectories(dir)
-    dir.toString
+    val p = Paths.get(dir(name, key))
+    deleteRecursively(p)
+    Files.createDirectories(p)
+    p.toString
   }
 
   private def deleteRecursively(p: Path): Unit =

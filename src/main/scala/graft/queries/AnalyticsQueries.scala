@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.core.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -139,13 +140,11 @@ object AnalyticsQueries {
     * byte-identical to the committed one); big-regime nodes derive
     * from the checkpointed layout itself (clustering already
     * satisfied → zero-shuffle local distinct, no second construction
-    * pass). Eviction: unpersist the persisted frames; checkpoint
-    * blocks free via the ContextCleaner once unreachable (unpersist
-    * is a deliberate no-op on them). */
-  private val prLayout = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (DataFrame, DataFrame, Boolean)]
+    * pass). Eviction (SessionMemo, on a corpus switch) unpersists the
+    * persisted frames; checkpoint blocks free via the ContextCleaner
+    * once unreachable (unpersist is a no-op on them). */
   private def pagerankLayout(s: SparkSession, d: String): (DataFrame, DataFrame, Boolean) =
-    graft.core.CorpusCaches.cachedPerCorpus(prLayout, s, d)({
+    SessionMemo.get(s, d, "analytics.pr_layout") {
       val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val big = graft.Sessions.dirBytes(d) >= PrBigBytes
       val pairs = Tables.lineitem(s, d)
@@ -171,9 +170,7 @@ object AnalyticsQueries {
         val nodes = deg.select(col("src").as("node")).persist(mad)
         (ed, nodes, false)
       }
-    })({ case (e, n, _) =>
-      e.unpersist(blocking = false); n.unpersist(blocking = false)
-    })
+    }
 
   /** The one-pass reservoir bound sketch behind [[distributionWindows]]
     * (extracted so NtileSketchEdgeSpec can pin its edge cases — NaN /

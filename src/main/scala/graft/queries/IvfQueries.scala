@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.core.SessionMemo
 import graft.functions.Fns
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -55,10 +56,8 @@ object IvfQueries {
   /** Fitted coarse quantizer (T7→IVF): MLlib KMeans over the full
     * 64-dim embeddings, seed pinned; memoized per (session, sfDir) so a
     * repeated bench pass times the search, not the re-fit. */
-  private val centersCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Array[Double]]]
   private def fittedCenters(s: SparkSession, d: String): Array[Array[Double]] = {
-    val cs = centersCache.getOrElseUpdate((s, d), {
+    val cs = SessionMemo.get(s, d, "ivf.centers") {
       val fv = Tables.embeddings(s, d).select(
         col("vec_id"),
         org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("fv"))
@@ -66,7 +65,7 @@ object IvfQueries {
         .setK(FittedK).setSeed(42).setMaxIter(20)
         .setFeaturesCol("fv").setPredictionCol("cell")
         .fit(fv).clusterCenters.map(_.toArray)
-    })
+    }
     centersSlot.put(d, cs)
     cs
   }
@@ -78,16 +77,14 @@ object IvfQueries {
     * one codegen'd dot product per component — the reference transpiles
     * fitted components into explicit SQL arithmetic the same way
     * (src/featurizers/create_featurizer_pg.py:141-170). */
-  private val pcaCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Array[Double]]]
   private def fittedComponents(s: SparkSession, d: String): Array[Array[Double]] = {
-    val pc = pcaCache.getOrElseUpdate((s, d), {
+    val pc = SessionMemo.get(s, d, "ivf.pca") {
       val fv = Tables.embeddings(s, d).select(
         org.apache.spark.ml.functions.array_to_vector(col("embedding")).as("fv"))
       val m = new org.apache.spark.ml.feature.PCA()
         .setK(PcaK).setInputCol("fv").setOutputCol("pc").fit(fv).pc
       Array.tabulate(PcaK)(j => Array.tabulate(Dim)(i => m(i, j)))
-    })
+    }
     pcaSlot.put(d, pc)
     pc
   }
@@ -198,14 +195,13 @@ object IvfQueries {
 
   /** (vec_id, embedding, nsq) cached once per (session, sfDir) — shared
     * by the fitted-quantizer search and the sweep. */
-  private val embCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def cachedEmb(s: SparkSession, d: String): DataFrame =
-    embCache.getOrElseUpdate((s, d),
+    SessionMemo.get(s, d, "ivf.emb") {
       Tables.embeddings(s, d)
         .repartition(s.sparkContext.defaultParallelism)
         .select(col("vec_id"), col("embedding"), Fns.normSq(col("embedding")).as("nsq"))
-        .cache())
+        .cache()
+    }
 
   private def queries(s: SparkSession, d: String): DataFrame =
     cachedEmb(s, d).filter(col("vec_id") < 100)
@@ -217,10 +213,8 @@ object IvfQueries {
     * once per (session, sfDir): 100 rows, collected and re-wrapped so no
     * later plan can re-execute the crossJoin. Tie-break (cos desc,
     * n_id asc) must match the candidate-side min_by orderings. */
-  private val bfTopCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
   private def bfTop(s: SparkSession, d: String): DataFrame =
-    bfTopCache.getOrElseUpdate((s, d), {
+    SessionMemo.get(s, d, "ivf.bf_top") {
       val e = cachedEmb(s, d)
       val top = queries(s, d)
         .crossJoin(e.select(col("vec_id").as("n_id"),
@@ -233,7 +227,7 @@ object IvfQueries {
         .agg(min_by(struct(col("n_id"), col("cos")), struct(-col("cos"), col("n_id"))).as("x"))
         .select(col("q_id"), col("x.n_id").as("bf_id"), col("x.cos").as("bf_cos"))
       s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    })
+    }
 
   /** (q_id, sq8_id): the SQ8 asymmetric-distance top-1 per query —
     * the candidate side of x_ann_ivf_sq8, shared with
@@ -473,7 +467,7 @@ object IvfQueries {
     // brute-force top-1 so the fitted quantizer's quality is measured,
     // not assumed. Oracle re-derives the whole search + recall from
     // the recorded center literals (r9); same cell-keyed equi-join shape.
-    "x_ann_ivf_kmeans" -> ((s, d) => kmeansResult.getOrElseUpdate((s, d), {
+    "x_ann_ivf_kmeans" -> ((s, d) => SessionMemo.get(s, d, "ivf.kmeans") {
       val centers = fittedCenters(s, d)
       val e = cachedEmb(s, d)
       val inv = e.select(col("vec_id").as("n_id"), col("embedding").as("n_emb"),
@@ -504,7 +498,7 @@ object IvfQueries {
       // re-execute it — the first (timed) invocation pays, later
       // invocations get the materialized row back.
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-    })),
+    }),
 
     // ANN-model persistence round-trip — the S5 story for the vector
     // family: the fitted coarse quantizer (KMeans centers) persists as
@@ -550,7 +544,7 @@ object IvfQueries {
     // brute-force ground truth. Oracle re-quantizes and re-searches
     // from the recorded literals (r9); sequential per-row array folds
     // keep it partition-invariant.
-    "x_ann_ivf_sq8" -> ((s, d) => sq8Result.getOrElseUpdate((s, d), {
+    "x_ann_ivf_sq8" -> ((s, d) => SessionMemo.get(s, d, "ivf.sq8") {
       val res = sq8Top(s, d).join(bfTop(s, d), Seq("q_id"), "right")
         .agg(
           lit(FittedK).as("k"), lit(FittedNProbe).as("nprobe"),
@@ -559,7 +553,7 @@ object IvfQueries {
           // bytes per stored vector: int8 code + scale + norm vs float32
           lit(Dim + 16).as("bytes_sq8"), lit(4 * Dim).as("bytes_f32"))
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-    })),
+    }),
 
     // The on-disk ANN serving layout — IVF × SQ8 × storage: the
     // quantized inverted file is WRITTEN as cell-partitioned parquet
@@ -574,7 +568,7 @@ object IvfQueries {
     // to recall@1 vs the same brute-force ground truth. Oracle
     // re-derives the probe + recall from the recorded literals (r9);
     // layout staged once per (session, dir).
-    "x_ann_disk_probe" -> ((s, d) => diskProbeMemo.getOrElseUpdate((s, d), {
+    "x_ann_disk_probe" -> ((s, d) => SessionMemo.get(s, d, "ivf.disk_probe") {
       val centers = fittedCenters(s, d)
       val tv = graft.plans.TextVectorExprs
       val dir = graft.core.TmpDirs.scratch("ann_ivf_disk", d)
@@ -614,7 +608,7 @@ object IvfQueries {
           avg(coalesce(col("disk_id") === col("bf_id"), lit(false)).cast("double")).as("recall_at_1"),
           lit(probedCells.length).as("cells_read"), lit(FittedK).as("cells_total"))
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-    })),
+    }),
 
     // Product quantization + ADC + exact re-rank — the third
     // compression point of the ANN family (f32 256 B → SQ8 80 B → PQ
@@ -636,7 +630,7 @@ object IvfQueries {
     // the on-disk inverted file. Oracle re-encodes + re-searches from
     // the recorded codebooks (r9); per-query LUTs + integer codes keep
     // it partition-invariant.
-    "x_ann_pq" -> ((s, d) => pqResult.getOrElseUpdate((s, d), {
+    "x_ann_pq" -> ((s, d) => SessionMemo.get(s, d, "ivf.pq") {
       val tv = graft.plans.TextVectorExprs
       val books = pqCodebooks(s, d) // [m][k][j]
       val slN = pqShortlist(cachedEmb(s, d).count())
@@ -681,7 +675,7 @@ object IvfQueries {
           // bytes per stored vector: one code byte per subspace + norm
           lit(PqM + 8).as("bytes_pq"), lit(4 * Dim).as("bytes_f32"))
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-    })),
+    }),
 
     // IVFADC — PQ composed INSIDE the on-disk inverted file (VERDICT r8
     // Next #1): the cell-partitioned index stores 8 PQ code bytes + the
@@ -703,7 +697,7 @@ object IvfQueries {
     //    sparse; the per-task I/O bound nprobe/K holds regardless).
     // Oracle re-derives both operating points from the recorded
     // center + codebook literals (r9).
-    "x_ann_ivf_pq" -> ((s, d) => ivfPqResult.getOrElseUpdate((s, d), {
+    "x_ann_ivf_pq" -> ((s, d) => SessionMemo.get(s, d, "ivf.ivf_pq") {
       val tv = graft.plans.TextVectorExprs
       val centers = fittedCenters(s, d)
       val books = pqCodebooks(s, d)
@@ -774,7 +768,7 @@ object IvfQueries {
         .toDF("m", "ksub", "nprobe", "shortlist", "n_queries", "recall_at_1",
           "cells_probed_full", "demo_nprobe", "demo_n_queries",
           "demo_recall_at_1", "cells_read", "cells_total", "bytes_pq", "bytes_f32")
-    })),
+    }),
 
     // INCREMENTAL maintenance of the on-disk ANN index — the vector-
     // store ingestion path (the ANN-family sibling of x_index_append):
@@ -788,7 +782,7 @@ object IvfQueries {
     // probe's per-query top-1 from the APPENDED index, which the oracle
     // re-derives as the full-corpus search — so the green hash is the
     // append ≡ rebuild proof at the result level too.
-    "x_ann_disk_append" -> ((s, d) => diskAppendMemo.getOrElseUpdate((s, d), {
+    "x_ann_disk_append" -> ((s, d) => SessionMemo.get(s, d, "ivf.disk_append") {
       val centers = fittedCenters(s, d)
       val tv = graft.plans.TextVectorExprs
       val dir = graft.core.TmpDirs.scratch("ann_ivf_disk_append", d)
@@ -828,7 +822,7 @@ object IvfQueries {
         .groupBy("q_id")
         .agg(min_by(col("n_id"), struct(-col("adc"), col("n_id"))).as("disk_id"))
       s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    })),
+    }),
 
     // COMPACTION of the appended inverted file — the maintenance pass
     // that closes the on-disk ANN lifecycle (build → append →
@@ -843,7 +837,7 @@ object IvfQueries {
     // rows are the probe's top-1 from the COMPACTED index — the oracle
     // re-derives them as the full-corpus search, proving the layout
     // rewrite changed bytes-on-disk, not answers.
-    "x_ann_disk_compact" -> ((s, d) => diskCompactMemo.getOrElseUpdate((s, d), {
+    "x_ann_disk_compact" -> ((s, d) => SessionMemo.get(s, d, "ivf.disk_compact") {
       val centers = fittedCenters(s, d)
       val tv = graft.plans.TextVectorExprs
       val dir = graft.core.TmpDirs.scratch("ann_ivf_disk_compact", d)
@@ -893,7 +887,7 @@ object IvfQueries {
         .groupBy("q_id")
         .agg(min_by(col("n_id"), struct(-col("adc"), col("n_id"))).as("disk_id"))
       s.createDataFrame(java.util.Arrays.asList(top.collect(): _*), top.schema)
-    })),
+    }),
 
     // FILTERED vector search — the query every production vector store
     // must answer ("nearest doc WHERE lang = X / license = Y"): the
@@ -905,7 +899,7 @@ object IvfQueries {
     // FILTERED brute-force truth (the only honest denominator). Same
     // fitted quantizer + operating point as x_ann_ivf_kmeans; the
     // oracle re-derives the filtered search and recall end to end.
-    "x_ann_ivf_filtered" -> ((s, d) => filteredResult.getOrElseUpdate((s, d), {
+    "x_ann_ivf_filtered" -> ((s, d) => SessionMemo.get(s, d, "ivf.filtered") {
       val centers = fittedCenters(s, d)
       val e = cachedEmb(s, d)
       val allowed = e.filter(pmod(col("vec_id"), lit(3L)) === 0L)
@@ -938,7 +932,7 @@ object IvfQueries {
           .crossJoin(e.agg(count(lit(1)).as("n_total")))
           .select((col("n_allowed").cast("double") / col("n_total")).as("selectivity")))
       s.createDataFrame(java.util.Arrays.asList(res.collect(): _*), res.schema)
-    })),
+    }),
 
     // The IVF operating curve (nprobe -> recall/cost), the sweep every
     // real ANN deployment tunes by: one row per probe depth with
@@ -948,7 +942,7 @@ object IvfQueries {
     // neighbor's cell ranks within the query's `p` nearest cells, so
     // recall@1(p) = avg(rank-of-true-cell <= p); no per-p search runs.
     // Rows-only (fitted KMeans centers are not SQL-expressible).
-    "x_ann_ivf_sweep" -> ((s, d) => sweepResult.getOrElseUpdate((s, d), {
+    "x_ann_ivf_sweep" -> ((s, d) => SessionMemo.get(s, d, "ivf.sweep") {
       // depths bracketing the default operating point (FittedNProbe=24)
       // so the curve shows what the chosen recall COSTS in scan fraction
       val probes = Seq(1, 4, 8, 16, 24, 32)
@@ -988,7 +982,7 @@ object IvfQueries {
         (p.toLong, nq, math.floor(recallRow.getDouble(i + 1) * 1e4 + 0.5) / 1e4,
          math.floor(scanRow.getDouble(i) / total * 1e4 + 0.5) / 1e4)
       }.toDF("nprobe", "n_queries", "recall_at_1", "scan_frac")
-    }))
+    })
   )
 
   // PQ geometry: 64 dims → 8 subspaces × 8 dims, 32 codewords each
@@ -1030,10 +1024,8 @@ object IvfQueries {
 
   /** Per-subspace PQ codebooks [m][k][j], 8 pinned-seed KMeans fits on
     * the 8-dim subvectors; memoized per (session, sfDir). */
-  private val pqBooksCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Array[Array[Double]]]]
   private def pqCodebooks(s: SparkSession, d: String): Array[Array[Array[Double]]] =
-    pqBooksCache.getOrElseUpdate((s, d), {
+    SessionMemo.get(s, d, "ivf.pq_books") {
       (0 until PqM).map { m =>
         val sub = Tables.embeddings(s, d).select(
           org.apache.spark.ml.functions.array_to_vector(
@@ -1043,26 +1035,7 @@ object IvfQueries {
           .setFeaturesCol("fv").setPredictionCol("c")
           .fit(sub).clusterCenters.map(_.toArray)
       }.toArray
-    })
-
-  private val pqResult =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val ivfPqResult =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val kmeansResult =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sq8Result =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val diskProbeMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val filteredResult =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val diskAppendMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val diskCompactMemo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
-  private val sweepResult =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), DataFrame]
+    }
 
   // ---- oracle ----
   private def centSql(k: Int): String =

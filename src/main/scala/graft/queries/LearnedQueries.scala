@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{InferDbPipeline, Tables}
-import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
+import graft.core.{Keys, KvIndexBuilder, NumericBins, SessionMemo, Task}
 import graft.metrics.Metrics
 import graft.multimodal.Multimodal
 import graft.streaming.StreamOps
@@ -39,7 +39,7 @@ object LearnedQueries {
     * fit-time work is bounded. */
   private val FitCap = 2000000L
   private def fitSampleMod(s: SparkSession, d: String): Long =
-    memoized(s, d, "fit_sample_mod") {
+    SessionMemo.get(s, d, "learned.fit_sample_mod") {
       val n = Tables.lineitem(s, d).count()
       (n + FitCap - 1) / FitCap
     }
@@ -73,26 +73,22 @@ object LearnedQueries {
 
   // One fit per (session, sfDir, config): x_learned_e2e / x_learned_parity
   // / x_report share the binary lifecycle, and EVERY learned row is
-  // memoized so a repeated bench pass times the serve path instead of
-  // re-paying MLlib training wall-clock (whose run-to-run variance made
-  // round-over-round perf deltas unreadable).
-  private val memo =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), Any]
-  private def memoized[T](s: SparkSession, d: String, key: String)(f: => T): T =
-    memo.getOrElseUpdate((s, d, key), f).asInstanceOf[T]
+  // memoized (SessionMemo, names prefixed "learned.") so a repeated
+  // bench pass times the serve path instead of re-paying MLlib training
+  // wall-clock (whose run-to-run variance made round-over-round perf
+  // deltas unreadable).
+
   // (user_id, ts) uniqueness underpins BOTH the sessionize oracle's tie
   // order and the stream-dedup oracle's plain projection; memoized so
   // timed invocations don't re-pay the scan.
-  private val tsUnique =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Unit]
   private def assertEventsTsUnique(s: SparkSession, d: String): Unit =
-    tsUnique.getOrElseUpdate((s, d), {
+    SessionMemo.get(s, d, "learned.ts_unique") {
       val dups = Tables.events(s, d).agg(
         (count(lit(1)) - count_distinct(struct(col("user_id"), col("ts")))).as("d"))
         .head().getLong(0)
       require(dups == 0L,
         s"events needs unique (user_id, ts); found $dups duplicate pairs")
-    })
+    }
 
   /** The four numeric model inputs shared by the zoo/MLP lifecycles;
     * [[numericFeatSql]] is their SQL twin over raw lineitem. */
@@ -106,7 +102,7 @@ object LearnedQueries {
     * the zoo parity rows, the transpiled serve queries, and the
     * extraction-fidelity specs (package-visible for the latter). */
   private[queries] def fittedZooCls(s: SparkSession, d: String, model: String) =
-    memoized(s, d, s"${model}_cls") {
+    SessionMemo.get(s, d, s"learned.${model}_cls") {
       InferDbPipeline.fitLifecycle(trainFrame(s, d), e2eConfig.copy(
         model = model, features = numericFeats, categorical = Set.empty))
     }
@@ -115,7 +111,7 @@ object LearnedQueries {
     * lineitem lifecycle; keeps the MLlib model for the transpiled
     * regression serves. */
   private[queries] def fittedZooReg(s: SparkSession, d: String, model: String) =
-    memoized(s, d, s"${model}_reg") {
+    SessionMemo.get(s, d, s"learned.${model}_reg") {
       val df = capFitRows(s, d, Tables.lineitem(s, d)).select(
         col("l_quantity"), col("l_discount"), col("l_tax"),
         log(col("l_extendedprice") + 1.0).as("target"),
@@ -149,7 +145,7 @@ object LearnedQueries {
       // the scored frame is also memoized+cached: the model transform
       // (MLlib row-at-a-time for dt) + probe join would otherwise
       // re-run for each of the row's metric heads
-      val scored = memoized(s, d, s"${model}_cls_scored") {
+      val scored = SessionMemo.get(s, d, s"learned.${model}_cls_scored") {
         t.fitted.transform(t.withPred, "index_pred").cache()
       }
       (Metrics.binaryReport(scored, col("__model_pred"), col("target"))
@@ -160,7 +156,7 @@ object LearnedQueries {
     val (regModelR, regIndexR) = {
       val t = fittedZooReg(s, d, model)
       val (f, withPred) = (t.fitted, t.withPred)
-      val scored = memoized(s, d, s"${model}_reg_scored") {
+      val scored = SessionMemo.get(s, d, s"learned.${model}_reg_scored") {
         f.transform(withPred, "index_pred")
           .withColumn("model_price", exp(col("__model_pred")) - 1.0)
           .withColumn("index_price", exp(col("index_pred")) - 1.0)
@@ -219,11 +215,9 @@ object LearnedQueries {
   // (vocab, logTheta class-major, logPi, class labels)
   private val nbSlot =
     new DynOracleSlot[(Array[String], Array[Array[Double]], Array[Double], Array[String])]
-  private val nbMemo = scala.collection.concurrent.TrieMap
-    .empty[(SparkSession, String), (graft.plans.NbRef, Long, Double, Double)]
 
   private def fittedT(s: SparkSession, d: String): InferDbPipeline.Trained = {
-    val t = memoized(s, d, "binary_e2e") {
+    val t = SessionMemo.get(s, d, "learned.binary_e2e") {
       val tr = InferDbPipeline.fitLifecycle(trainFrame(s, d), e2eConfig)
       tr.copy(withPred = tr.withPred.cache())
     }
@@ -242,7 +236,7 @@ object LearnedQueries {
   }
 
   private def fittedMlp(s: SparkSession, d: String) =
-    memoized(s, d, "mlp") {
+    SessionMemo.get(s, d, "learned.mlp") {
       val cfg = e2eConfig.copy(model = "mlp",
         features = numericFeats, categorical = Set.empty)
       InferDbPipeline.fitLifecycle(trainFrame(s, d), cfg)
@@ -337,7 +331,7 @@ object LearnedQueries {
   private def regFeatCols = regFeats.map(col)
 
   private def fittedCat(s: SparkSession, d: String): InferDbPipeline.Trained =
-    memoized(s, d, "categorical") {
+    SessionMemo.get(s, d, "learned.categorical") {
       val df = capFitRows(s, d, Tables.lineitem(s, d)).select(
         col("l_quantity"), col("l_discount"), col("l_returnflag"),
         // returnflag IS the signal: quantity/discount carry ~none
@@ -422,7 +416,7 @@ object LearnedQueries {
     * decides to grow categorical splits; without it every feature is
     * continuous. Shared by the DT and GBT nominal lifecycles. */
   private def catTreeTrain(s: SparkSession, d: String): DataFrame =
-    memoized(s, d, "cat_tree_train") {
+    SessionMemo.get(s, d, "learned.cat_tree_train") {
       import org.apache.spark.ml.attribute.{Attribute, AttributeGroup, NominalAttribute, NumericAttribute}
       val df = capFitRows(s, d, Tables.lineitem(s, d)).select(
         rfCodeCol.as("rf_code"),
@@ -441,7 +435,7 @@ object LearnedQueries {
     }
 
   private[queries] def fittedDtCatRoot(s: SparkSession, d: String): org.apache.spark.ml.tree.Node = {
-    val root = memoized(s, d, "dt_cat") {
+    val root = SessionMemo.get(s, d, "learned.dt_cat") {
       val m = new org.apache.spark.ml.classification.DecisionTreeClassifier()
         .setFeaturesCol("__fv").setLabelCol("target")
         .setSeed(42).setMaxDepth(4)
@@ -458,7 +452,7 @@ object LearnedQueries {
     * serving — every tree's categorical nodes ride the same compiled
     * membership branch. */
   private[queries] def fittedGbtCat(s: SparkSession, d: String): (Seq[org.apache.spark.ml.tree.Node], Array[Double]) = {
-    val tw = memoized(s, d, "gbt_cat") {
+    val tw = SessionMemo.get(s, d, "learned.gbt_cat") {
       val m = new org.apache.spark.ml.classification.GBTClassifier()
         .setFeaturesCol("__fv").setLabelCol("target")
         .setSeed(42).setMaxDepth(4).setMaxIter(10)
@@ -496,7 +490,7 @@ object LearnedQueries {
   }
 
   private def fittedMc(s: SparkSession, d: String): InferDbPipeline.Trained = {
-    val t = memoized(s, d, "multiclass") {
+    val t = SessionMemo.get(s, d, "learned.multiclass") {
       val df = Tables.orders(s, d).select(
         col("o_totalprice"), (col("o_custkey") % 50).cast("double").as("cust_mod"),
         when(col("o_orderstatus") === "F", 0.0)
@@ -544,7 +538,7 @@ object LearnedQueries {
     * Returns (ref, nDocs, agreement, accuracy); memoized per
     * (session, dir) so the serve query and Bench pay the fit once. */
   private[queries] def fittedNb(s: SparkSession, d: String): (graft.plans.NbRef, Long, Double, Double) =
-    nbMemo.getOrElseUpdate((s, d), {
+    SessionMemo.get(s, d, "learned.nb") {
       val docs = Tables.documents(s, d).select("doc_id", "text", "lang").cache()
       val vocab = docs.select(explode(split(col("text"), " ")).as("t"))
         .groupBy("t").agg(count(lit(1)).as("tf"))
@@ -584,7 +578,7 @@ object LearnedQueries {
         .head()
       docs.unpersist()
       (ref, fid.getLong(0), fid.getDouble(1), fid.getDouble(2))
-    })
+    }
 
   /** Fitted-LR coefficients from a numeric-feature zoo fit; recorded
     * for the transpiled-serve oracle. */
@@ -607,7 +601,7 @@ object LearnedQueries {
   }
 
   private def fittedReg(s: SparkSession, d: String) = {
-    val t = memoized(s, d, "regression") {
+    val t = SessionMemo.get(s, d, "learned.regression") {
       val df = capFitRows(s, d, Tables.lineitem(s, d)).select(
         col("l_quantity"), col("l_discount"), col("l_tax"),
         log(col("l_extendedprice") + 1.0).as("target"),
@@ -649,7 +643,7 @@ object LearnedQueries {
     // save→load→serve loses nothing (the reference's joblib dump +
     // re-serve lifecycle, transpiler.py:3188-3194, :3266-3273).
     "x_persist_serve" -> ((s, d) => {
-      val reloaded = memoized(s, d, "persist_reload") {
+      val reloaded = SessionMemo.get(s, d, "learned.persist_reload") {
         val (f, _) = fitted(s, d)
         val dir = graft.core.TmpDirs.scratch("fitted_artifact", d)
         f.save(dir)
@@ -691,7 +685,7 @@ object LearnedQueries {
       // scorer + three aggregations cost ~2 s per invocation, and a
       // bench re-invocation should time the marginal path like the
       // other memoized learned rows
-      memoized(s, d, "mlp_row") {
+      SessionMemo.get(s, d, "learned.mlp_row") {
         val scored = t.fitted.transform(t.withPred, "index_pred")
           .withColumn("fused_pred", fused.predictClass(numericFeats.map(col)).cast("double"))
         val modelF1 = Metrics.binaryReport(scored, col("__model_pred"), col("target"))
@@ -1081,7 +1075,7 @@ object LearnedQueries {
     // stays an in-query require (> 0, logged) so the declared row is
     // fully deterministic and its oracle re-derives BOTH prediction
     // sides from the fitted literals over the synthetic feature SQL.
-    "x_width_stress" -> ((s, d) => memoized(s, d, "width_stress_row") {
+    "x_width_stress" -> ((s, d) => SessionMemo.get(s, d, "learned.width_stress_row") {
       val width = 784
       val feats = (0 until width).map { i =>
         (element_at(col("embedding"), i % 64 + 1).cast("double") * ((i / 64) + 1)
@@ -1395,7 +1389,7 @@ object LearnedQueries {
     // with the replay for eviction to be observable, so the 4 staged
     // batches are hour-blocked (batch i carries only ts in
     // [i·2h, i·2h+2h)) and their file modification times pin the replay
-    // order (StreamOps.stageOrderedFiles). A single far-future sentinel
+    // order (StreamOps.stageOrderedFilesTagged). A single far-future sentinel
     // doc in a 5th file pushes the watermark past every real window so
     // the tail windows FLUSH (append emits a window only once its end
     // passes the watermark); the sentinel's own window is excluded from

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.core.SessionMemo
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -24,28 +25,27 @@ object StorageQueries {
   private def sumCents(c: org.apache.spark.sql.Column) =
     sum(round(c * 100).cast("long")) / 100.0
 
+  /** Test hook: the staged path for a layout (None if not yet built) —
+    * StorageQueriesSpec asserts the bucketed layout holds ONE file per
+    * bucket (the r15 sf100 diagnosis: an unclustered bucketed write
+    * emits writeTasks x buckets files). Never calls TmpDirs.scratch
+    * (which clears on entry). */
+  private[graft] def stagedPath(d: String, name: String): Option[String] =
+    Some(graft.core.TmpDirs.dir(name, d)).filter(p => new java.io.File(p).isDirectory)
+
   /** One-time layout staging per (session, sfDir, name): the whole
     * point of a derived layout is paying the write ONCE and serving
     * many queries from it, so repeated invocations (bench best-of,
     * verify reruns) read the staged copy instead of re-writing it.
     * `TmpDirs.scratch` clears on entry, so it must only run inside
     * the memoized block. */
-  private val staged =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String, String), String]
-  /** Test hook: the staged path for a layout (None if not yet built) —
-    * StorageQueriesSpec asserts the bucketed layout holds ONE file per
-    * bucket (the r15 sf100 diagnosis: an unclustered bucketed write
-    * emits writeTasks x buckets files). Never calls TmpDirs.scratch
-    * (which clears on entry). */
-  private[graft] def stagedPath(s: SparkSession, d: String, name: String): Option[String] =
-    staged.get((s, d, name))
   private def stagedOnce(s: SparkSession, d: String, name: String)(
       write: String => Unit): String =
-    staged.getOrElseUpdate((s, d, name), {
+    SessionMemo.get(s, d, s"storage.staged.$name") {
       val tmp = graft.core.TmpDirs.scratch(name, d)
       write(tmp)
       tmp
-    })
+    }
 
   /** CTAS into a hive-partitioned layout, then a filtered read-back.
     * At 100 TB, partitioning on a low-cardinality predicate column means
@@ -236,19 +236,17 @@ object StorageQueries {
     * path (no broadcast — asserted), and the bloom probe is asserted
     * present in the physical plan.
     */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[(SparkSession, String), Array[Byte]]
   private def bloomPrunedJoin(s: SparkSession, d: String): DataFrame = {
     val dim = Tables.orders(s, d)
       .filter(col("o_totalprice") > 480000.0)
       .select("o_orderkey", "o_orderstatus", "o_totalprice")
-    val bloom = bloomCache.getOrElseUpdate((s, d), {
+    val bloom = SessionMemo.get(s, d, "storage.bloom") {
       val n = dim.count()
       // 16 bits/item ≈ 5e-4 fpp — literal-sized at any realistic
       // filtered-dim cardinality (1e8 keys → 200 MB would exceed the
       // literal budget; that regime belongs to AQE's runtime filters)
       graft.plans.BloomExprs.buildBloom(dim, col("o_orderkey"), n, n * 16)
-    })
+    }
     val fact = Tables.lineitem(s, d)
       .filter(graft.plans.BloomExprs.mightContain(bloom, col("l_orderkey")))
       .select("l_orderkey", "l_extendedprice")

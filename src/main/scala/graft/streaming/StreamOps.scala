@@ -16,7 +16,7 @@ object StreamOps {
     * row, recorded by [[recordBatchMillis]] just before each query
     * stops. The declared rows' wall-clocks are dominated by file-replay
     * scaffolding (staging, trigger setup, checkpointing); Bench reads
-    * this map to publish `<name>_per_batch_ms` companions so the
+    * this map to publish `<name>_per_batch_ms` companion rows so the
     * steady-state per-trigger operator cost is separable from the
     * replay harness (VERDICT r10 Next #6). */
   val batchMillis = new java.util.concurrent.ConcurrentHashMap[String, Double]()
@@ -234,46 +234,25 @@ object StreamOps {
     try body finally spark.conf.set(key, prev)
   }
 
-  /** Stage `parts` as one parquet FILE each (b00.parquet, b01.parquet…)
-    * with strictly increasing modification times, so a file-stream
-    * replay with maxFilesPerTrigger=1 processes them in EXACTLY this
-    * order (FileStreamSource orders unseen files by modification time).
-    * Watermark-sensitive replays need this: event time must advance
-    * with the batch sequence, or late-drop behavior becomes
-    * nondeterministic across runs.
-    */
-  def stageOrderedFiles(parts: Seq[DataFrame], dir: String): Unit =
-    parts.zipWithIndex.foreach { case (df, i) =>
-      val tmp = new java.io.File(dir, s"_stage$i")
-      df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")) match {
-        case Array(one) => one
-        case other => throw new IllegalStateException(
-          s"expected exactly one staged part file, found ${other.length}")
-      }
-      val dst = new java.io.File(dir, f"b$i%02d.parquet")
-      java.nio.file.Files.move(part.toPath, dst.toPath,
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      // distinct, increasing, second-granularity-safe mod times
-      require(dst.setLastModified(1700000000000L + i * 60000L),
-        s"could not pin modification time of $dst")
-      tmp.listFiles().foreach(_.delete()); tmp.delete()
-    }
-
-  /** ONE-JOB form of [[stageOrderedFiles]] (r17, guide §1.2/§2.4 —
-    * fewer passes, fewer driver jobs): `tagged` carries an integer
-    * batch column `bCol` with values 0 until n, and the whole replay
-    * stages in a single shuffle+write job — where the Seq form ran one
-    * coalesce(1) write JOB per batch, each rescanning its input. The
-    * hash repartition on `bCol` puts every batch's rows in exactly one
-    * task, so each `bCol=i` directory holds exactly one part file
-    * (asserted), which is then renamed to the same b<ii>.parquet layout
-    * with the same pinned, strictly increasing modification times — the
-    * replay a FileStreamSource sees is IDENTICAL to the Seq form's
-    * (same files, same order, same rows; only intra-file row order may
-    * differ, which no windowed/sessionized aggregate can observe).
-    * `partitionBy` drops `bCol` from the file schema, matching the
-    * untagged frames the Seq form stages. */
+  /** Stage a replay as one parquet FILE per batch (b00.parquet,
+    * b01.parquet…) with strictly increasing modification times, so a
+    * file-stream replay with maxFilesPerTrigger=1 processes them in
+    * EXACTLY batch order (FileStreamSource orders unseen files by
+    * modification time). Watermark-sensitive replays need this: event
+    * time must advance with the batch sequence, or late-drop behavior
+    * becomes nondeterministic across runs.
+    *
+    * `tagged` carries an integer batch column `bCol` with values
+    * 0 until n, and the whole replay stages in a single shuffle+write
+    * job (r17, guide §1.2/§2.4 — one job instead of a coalesce(1)
+    * write job per batch, each rescanning its input). The hash
+    * repartition on `bCol` puts every batch's rows in exactly one task,
+    * so each `bCol=i` directory holds exactly one part file (asserted),
+    * which is then renamed to b<ii>.parquet with its pinned
+    * modification time. `partitionBy` drops `bCol` from the file
+    * schema. A tag outside 0 until n (or NULL) fails loudly, naming the
+    * stray values — its rows would otherwise silently drop out of the
+    * replay. */
   def stageOrderedFilesTagged(tagged: DataFrame, bCol: String, n: Int, dir: String): Unit = {
     val tmp = new java.io.File(dir, "_stage_tagged")
     tagged.repartition(n, col(bCol))
@@ -292,11 +271,19 @@ object StreamOps {
       require(dst.setLastModified(1700000000000L + i * 60000L),
         s"could not pin modification time of $dst")
     }
+    // every in-range batch dir was emptied above; any other bCol= dir
+    // holds rows whose tag is outside 0 until n
+    val staged = (0 until n).map(i => s"$bCol=$i").toSet
+    val stray = Option(tmp.listFiles()).getOrElse(Array.empty).map(_.getName)
+      .filter(f => f.startsWith(s"$bCol=") && !staged(f))
+      .map(_.stripPrefix(s"$bCol=")).sorted
     // clean the temp tree (dir-per-value + _SUCCESS)
     def rm(f: java.io.File): Unit = {
       Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
     }
     rm(tmp)
+    require(stray.isEmpty,
+      s"$bCol values outside 0 until $n would be dropped from the replay: ${stray.mkString(", ")}")
   }
 
   /** foreachBatch sink: per-micro-batch the batch DataFrame is handed to

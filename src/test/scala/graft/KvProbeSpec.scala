@@ -71,4 +71,41 @@ class KvProbeSpec extends AnyFunSuite {
       assert(!plan.contains("Exchange"), "compiled probe must not exchange")
     } finally spark.conf.set("spark.sql.adaptive.enabled", aqeBefore)
   }
+
+  test("toLocalScorer's collect jobs run in the caller's job group") {
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.put(js.jobId, Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("<none>"))
+    }
+    def jobIds: Set[Int] = { import scala.jdk.CollectionConverters._; groups.keySet.asScala.toSet }
+    // the listener bus is async (waitUntilEmpty is private[spark]):
+    // poll until the job count is stable, bounded at 10 s
+    def settle(): Unit = {
+      var (last, stable, waited) = (-1, 0, 0)
+      while (stable < 3 && waited < 10000) {
+        val cur = groups.size
+        if (cur == last) stable += 1 else { stable = 0; last = cur }
+        Thread.sleep(100); waited += 100
+      }
+    }
+    def scoreUnder(group: String): Unit = {
+      sc.setJobGroup(group, "toLocalScorer job-group spec", false)
+      try model.toLocalScorer finally sc.clearJobGroup()
+    }
+    sc.addSparkListener(listener)
+    try {
+      scoreUnder("a")
+      settle()
+      val afterA = jobIds
+      scoreUnder("b")
+      settle()
+      val second = (jobIds -- afterA).toSeq.map(groups.get)
+      assert(second.size >= 1 + model.prefixes.length,
+        s"expected one collect job per table, saw ${second.size}")
+      assert(second.forall(_ == "b"), s"second call's jobs ran under groups $second")
+    } finally sc.removeSparkListener(listener)
+  }
 }

@@ -258,4 +258,19 @@ class DedupScaleSpec extends AnyFunSuite {
         s"verified dup ($a,$b) missing from the containment output")
     }
   }
+
+  test("the first LSH-family query leaves no signature cache behind") {
+    // a fresh session so the LSH pairs memo is built inside this test
+    val s = spark.newSession()
+    val sc = s.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    TextQueries.defs("t_dedup_minhash")(s, sf).count()
+    assert(sc.getPersistentRDDs.keySet.exists(id => !before.contains(id)),
+      "the pairs memo must have been built (its local checkpoint)")
+    // a cached frame's RDD is named after its physical plan
+    val sigCaches = sc.getPersistentRDDs.values
+      .filter(r => Option(r.name).exists(_.contains("minhash_sig(")))
+    assert(sigCaches.isEmpty,
+      s"the minhash signature is still cached: RDDs ${sigCaches.map(_.id)}")
+  }
 }

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * staged replay bytes instead of riding the session's flat |cores|.
   * Three contracts: (a) the conf is set inside the block and RESTORED
   * after (success and failure paths); (b) the sizing clamps to
-  * [4, 4·defaultParallelism] with ~1 MB/partition density; (c) the
+  * [4, defaultParallelism] with ~1 MB/partition density; (c) the
   * streamed result is bitwise partition-count INDEPENDENT — the whole
   * reason the knob is free to vary per eval.
   */
@@ -91,33 +91,39 @@ class StatePartitionSizingSpec extends AnyFunSuite {
     assert(at4.nonEmpty, "the equivalence check must compare real rows")
   }
 
-  test("stageOrderedFilesTagged stages the same replay as stageOrderedFiles") {
+  test("tagged staging writes one pinned, ordered file per batch") {
     import spark.implicits._
     val rows = (0L until 300L).map(i => (i, s"u${i % 7}"))
     val df = rows.toDF("id", "u")
-    val parts = (0 until 3).map(i => df.filter(pmod(col("id"), lit(3L)) === i))
-    val seqDir = graft.core.TmpDirs.scratch("stage_tagged_seq", "spec")
     val tagDir = graft.core.TmpDirs.scratch("stage_tagged_one", "spec")
-    StreamOps.stageOrderedFiles(parts, seqDir)
     StreamOps.stageOrderedFilesTagged(
       df.withColumn("__b", pmod(col("id"), lit(3L)).cast("int")), "__b", 3, tagDir)
-    def fileRows(dir: String, i: Int): Set[(Long, String)] =
-      spark.read.parquet(f"$dir/b$i%02d.parquet")
+    def fileRows(i: Int): Set[(Long, String)] =
+      spark.read.parquet(f"$tagDir/b$i%02d.parquet")
         .collect().map(r => (r.getLong(0), r.getString(1))).toSet
     (0 until 3).foreach { i =>
-      assert(fileRows(seqDir, i) == fileRows(tagDir, i),
-        s"staged batch $i differs between the one-job and per-part forms")
-      val seqF = new java.io.File(seqDir, f"b$i%02d.parquet")
-      val tagF = new java.io.File(tagDir, f"b$i%02d.parquet")
-      assert(seqF.lastModified == tagF.lastModified,
-        s"batch $i modification times must pin the same replay order")
+      assert(fileRows(i) == rows.filter(_._1 % 3 == i).toSet,
+        s"staged batch $i does not hold exactly its tagged rows")
     }
-    // schema must be the untagged one (partitionBy drops the tag column);
-    // compare file-to-file — parquet read-back relaxes nullability on
-    // both forms identically
-    assert(spark.read.parquet(s"$tagDir/b00.parquet").schema
-      == spark.read.parquet(s"$seqDir/b00.parquet").schema)
+    val modTimes = (0 until 3).map(i => new java.io.File(tagDir, f"b$i%02d.parquet").lastModified)
+    assert(modTimes == modTimes.sorted && modTimes.distinct.size == 3,
+      s"modification times $modTimes must pin the batch order")
+    // the file schema is the untagged one (partitionBy drops the tag
+    // column); parquet read-back relaxes nullability, so compare types
+    assert(spark.read.parquet(s"$tagDir/b00.parquet").schema.map(f => f.name -> f.dataType)
+      == df.schema.map(f => f.name -> f.dataType))
     // no temp droppings left behind
     assert(!new java.io.File(tagDir, "_stage_tagged").exists)
+  }
+
+  test("tagged staging fails loudly on out-of-range tags") {
+    import spark.implicits._
+    val dir = graft.core.TmpDirs.scratch("stage_tagged_stray", "spec")
+    val tagged = Seq((1L, 0), (2L, 1), (3L, 2), (4L, 5), (5L, -1)).toDF("id", "__b")
+    val e = intercept[IllegalArgumentException] {
+      StreamOps.stageOrderedFilesTagged(tagged, "__b", 3, dir)
+    }
+    assert(e.getMessage.contains("-1, 5"), e.getMessage)
+    assert(!new java.io.File(dir, "_stage_tagged").exists)
   }
 }

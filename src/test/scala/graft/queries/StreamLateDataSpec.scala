@@ -24,6 +24,10 @@ import org.scalatest.funsuite.AnyFunSuite
 class StreamLateDataSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
+  /** One frame whose `__b` column is each row's batch index. */
+  private def tagBatches(parts: Seq[org.apache.spark.sql.DataFrame]) =
+    parts.zipWithIndex.map { case (p, i) => p.withColumn("__b", lit(i)) }.reduce(_ union _)
+
   test("sliding windows drop a late event at the watermark; output matches the batch rule") {
     import spark.implicits._
     val dir = graft.core.TmpDirs.scratch("late_data_spec", "spec")
@@ -37,7 +41,7 @@ class StreamLateDataSpec extends AnyFunSuite {
     val b1 = Seq((4L, 14400L), (5L, 15000L)).toDF("id", "t")
     val b2 = Seq((6L, 16000L), (99L, 1800L)).toDF("id", "t")
     val b3 = Seq((100L, 30000L)).toDF("id", "t")
-    StreamOps.stageOrderedFiles(Seq(b0, b1, b2, b3), dir)
+    StreamOps.stageOrderedFilesTagged(tagBatches(Seq(b0, b1, b2, b3)), "__b", 4, dir)
     val stream = spark.readStream.schema(b0.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val agg = stream
@@ -77,7 +81,7 @@ class StreamLateDataSpec extends AnyFunSuite {
     // stage DESCENDING content so any content- or size-based ordering
     // would disagree with the staged order
     val parts = Seq(Seq(30L), Seq(20L, 21L), Seq(10L)).map(_.toDF("v"))
-    StreamOps.stageOrderedFiles(parts, dir)
+    StreamOps.stageOrderedFilesTagged(tagBatches(parts), "__b", parts.length, dir)
     val stream = spark.readStream.schema(parts.head.schema)
       .option("maxFilesPerTrigger", 1).parquet(dir)
     val batches = scala.collection.mutable.ArrayBuffer.empty[Seq[Long]]
