@@ -4,6 +4,7 @@ import graft.core.{Keys, KvIndexBuilder, NumericBins, Task}
 import graft.functions.Fns
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.util.control.NonFatal
 
 /** Benchmark main (driver contract): one JSON line with per-query
   * timings plus the reference's stage decomposition
@@ -12,9 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Stage queries mirror the reference's query-integration benchmark
   * (SURVEY §3.3 note): featurize = expression-only feature projection;
-  * translate = key construction; score = KV probe (broadcast joins +
-  * coalesce); end_to_end = featurize+translate+probe+selection folded
-  * into ONE fused plan — the capability PG needs three materialized
+  * translate = key construction; score = KV probe (the compiled
+  * packed-code kernel); end_to_end = featurize+translate+probe+selection
+  * folded into ONE fused plan — the capability PG needs three materialized
   * views for.
   */
 object Bench {
@@ -74,6 +75,13 @@ object Bench {
     ts(ts.length / 2)
   }
 
+  /** `f`, or `failed` with the error text recorded under `name` in
+    * `errors` (the artifact's "errors" map) when it throws non-fatally —
+    * a -1 row then says why it failed. */
+  private def recorded[T](errors: scala.collection.mutable.Map[String, String], name: String,
+      failed: T)(f: => T): T =
+    try f catch { case NonFatal(e) => errors(name) = e.toString; failed }
+
   /** Evaluate EVERY column — see [[graft.core.ForceEval]]. */
   private def evalAll(df: DataFrame): Long = graft.core.ForceEval.checksum(df)._1
 
@@ -108,10 +116,11 @@ object Bench {
     val qtyBins  = NumericBins(Array(10.0, 25.0, 40.0))
     val discBins = NumericBins(Array(0.03, 0.07))
     val taxBins  = NumericBins(Array(0.04))
-    def keyCol = Keys.keyColumn(Seq(
+    def keyBins = Seq(
       discBins.toColumn(col("l_discount")),
       taxBins.toColumn(col("l_tax")),
-      qtyBins.toColumn(col("l_quantity"))))
+      qtyBins.toColumn(col("l_quantity")))
+    def keyCol = Keys.keyColumn(keyBins)
     def featurized(df: DataFrame): DataFrame = df.select(
       col("l_orderkey"), col("l_quantity"), col("l_discount"), col("l_tax"),
       col("l_extendedprice"),
@@ -130,11 +139,11 @@ object Bench {
     val translate = if (spotOnly) -1.0
       else medianOf(stageIters)(evalAll(li.select(col("l_orderkey"), keyCol.as("key"))))
     val score     = if (spotOnly) -1.0
-      else medianOf(stageIters)(evalAll(kvOpt.get.probe(li, keyCol, "prediction")))
+      else medianOf(stageIters)(evalAll(kvOpt.get.probeBins(li, keyBins, "prediction")))
     // query-integration shape: featurize + translate + probe + predicate
     // + aggregate, one fused plan end to end (also the ladder body).
     def e2e(sel: Double): Long =
-      evalAll(kvOpt.get.probe(featurized(li), keyCol, "prediction")
+      evalAll(kvOpt.get.probeBins(featurized(li), keyBins, "prediction")
         .filter(col("prediction") > sel)
         .groupBy("ship_month")
         .agg(count(lit(1)).as("cnt"), sum("charge").as("rev")))
@@ -324,12 +333,14 @@ object Bench {
         .groupBy(pmod(col("id"), lit(1000L)).as("g"))
         .agg(count(lit(1)).as("n"), sum("id").as("s"), avg("id").as("a")))
 
+    // failed rows and readouts: name -> error text, written into the
+    // artifact next to their -1 values
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     val queryTimes = sweepList
       .map { case (name, fn) =>
       val t = try robustQueryTime(iters)(evalAll(fn(spark, sfDir))) catch {
-        case e: Throwable =>
-          // surface the failure under TRACE — a swallowed exception
-          // reads as a timing row (-1) and is undiagnosable otherwise
+        case NonFatal(e) =>
+          errors(name) = e.toString
           if (sys.env.contains("SPARK_GRAFT_BENCH_TRACE")) {
             System.err.println(s"[bench] $name FAILED: $e")
             e.getStackTrace.take(8).foreach(f => System.err.println(s"  at $f"))
@@ -386,33 +397,26 @@ object Bench {
 
     // fitted-quantizer ANN quality next to the timings (the query's
     // one-row result is collect-once memoized, so this read is free)
-    val ivfRecall = if (spotOnly) -1.0
-      else try SparkEntry.queries("x_ann_ivf_kmeans")(spark, sfDir)
-      .head().getAs[Double]("recall_at_1") catch { case _: Throwable => -1.0 }
+    def recall(q: String): Double = if (spotOnly) -1.0
+      else recorded(errors, s"$q.recall_at_1", -1.0)(
+        SparkEntry.queries(q)(spark, sfDir).head().getAs[Double]("recall_at_1"))
+    val ivfRecall = recall("x_ann_ivf_kmeans")
     // SQ8 twin: what the 3.2x memory compression costs in recall
-    val sq8Recall = if (spotOnly) -1.0
-      else try SparkEntry.queries("x_ann_ivf_sq8")(spark, sfDir)
-      .head().getAs[Double]("recall_at_1") catch { case _: Throwable => -1.0 }
+    val sq8Recall = recall("x_ann_ivf_sq8")
     // SQ8 ambiguity companion (VERDICT r11 Next #4): exact-cosine gap
     // between SQ8's winner and the true winner — gap ~ 0 with
     // recall < 1 means the misses are ambiguity-band neighbors
     // (candidates closer together than one int8 step, the near-dup-
     // dense-corpus regime), not quantization collapse.
     val (_, sq8GapMean, sq8GapMax) = if (spotOnly) (-1.0, -1.0, -1.0)
-      else try graft.queries.IvfQueries.sq8WinnerGap(spark, sfDir)
-      catch { case _: Throwable => (-1.0, -1.0, -1.0) }
+      else recorded(errors, "ivf_sq8_winner_cos_gap", (-1.0, -1.0, -1.0))(
+        graft.queries.IvfQueries.sq8WinnerGap(spark, sfDir))
     // PQ+re-rank: recall at 16x compression with a 64-item shortlist
-    val pqRecall = if (spotOnly) -1.0
-      else try SparkEntry.queries("x_ann_pq")(spark, sfDir)
-      .head().getAs[Double]("recall_at_1") catch { case _: Throwable => -1.0 }
+    val pqRecall = recall("x_ann_pq")
     // composed IVFADC (PQ inside the on-disk inverted file)
-    val ivfPqRecall = if (spotOnly) -1.0
-      else try SparkEntry.queries("x_ann_ivf_pq")(spark, sfDir)
-      .head().getAs[Double]("recall_at_1") catch { case _: Throwable => -1.0 }
+    val ivfPqRecall = recall("x_ann_ivf_pq")
     // pre-filtered search vs the filtered brute-force truth
-    val filteredRecall = if (spotOnly) -1.0
-      else try SparkEntry.queries("x_ann_ivf_filtered")(spark, sfDir)
-      .head().getAs[Double]("recall_at_1") catch { case _: Throwable => -1.0 }
+    val filteredRecall = recall("x_ann_ivf_filtered")
 
     val stages = Seq(
       "skew_join_unsalted" -> skewUnsalted,
@@ -462,10 +466,13 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":" + f"$v%.4f" }.mkString("{", ",", "}")
     val total = queryTimes.filter(_._2 >= 0).map(_._2).sum
     val rejectedField = if (rejected) "\"rejected\":true," else ""
+    val errs = errors.map { case (k, v) => Verify.jsonString(k) + ":" + Verify.jsonString(v) }
+      .mkString("{", ",", "}")
+    val nFailed = errors.size
     val canaryField =
       if (canaryName.isEmpty) "" else s""""canary_row":"$canaryName","""
     val line =
-      f"""{"queries":$qs,$rejectedField$canaryField"sf":"$sfDir","rows":$rows,"total_query_sec":$total%.2f,"metric":"inferdb_serve_end_to_end","unit":"sec","value":$endToEnd%.4f}"""
+      f"""{"queries":$qs,"errors":$errs,$rejectedField$canaryField"sf":"$sfDir","rows":$rows,"total_query_sec":$total%.2f,"metric":"inferdb_serve_end_to_end","unit":"sec","value":$endToEnd%.4f}"""
     println(line)
     // The driver archives only the TAIL of stdout (~2.2 KB) — r8 lost
     // 123 of 196 per-query timings to truncation. Persist the complete
@@ -482,7 +489,7 @@ object Bench {
     else outBase
     try java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] could not write $outFile: $e") }
     // Compact machine line LAST (VERDICT r15 What's wrong #3): the
     // driver archives only the TAIL of stdout (~2 KB) and the full
@@ -493,7 +500,7 @@ object Bench {
     // the complete line, so the graded artifact always holds parsed
     // numbers even when the big line is truncated.
     val summary =
-      f"""{"summary":true,$rejectedField"metric":"inferdb_serve_end_to_end","value":$endToEnd%.4f,"unit":"sec","sf":"$sfDir","rows":$rows,"total_query_sec":$total%.2f,"stage_featurize":$featurize%.4f,"stage_translate":$translate%.4f,"stage_score":$score%.4f,"canary_drift":$canaryDrift%.4f,"out_path":"$outFile"}"""
+      f"""{"summary":true,$rejectedField"metric":"inferdb_serve_end_to_end","value":$endToEnd%.4f,"unit":"sec","sf":"$sfDir","rows":$rows,"total_query_sec":$total%.2f,"n_failed":$nFailed,"stage_featurize":$featurize%.4f,"stage_translate":$translate%.4f,"stage_score":$score%.4f,"canary_drift":$canaryDrift%.4f,"out_path":"$outFile"}"""
     println(summary)
     spark.stop()
     if (rejected) {

@@ -43,13 +43,17 @@ object InferDbPipeline {
       iv: Double,
       kv: KvModel) {
 
-    /** Key expression over raw input columns (translate, §2.9). */
-    def keyColumn: Column =
-      Keys.keyColumn(selected.map(f => bins(f).toColumn(col(f))))
+    /** The key's LongType bin indices over raw input columns, in key
+      * order (translate, §2.9). */
+    def binColumns: Seq[Column] = selected.map(f => bins(f).toColumn(col(f)))
 
-    /** Add `predName` to `df` by translate + probe + fallback. */
+    /** The '.'-joined key string over raw input columns. */
+    def keyColumn: Column = Keys.keyColumn(binColumns)
+
+    /** Add `predName` to `df` by translate + probe + fallback, fused:
+      * the compiled kernel probes the packed bin codes directly. */
     def transform(df: DataFrame, predName: String = "prediction"): DataFrame =
-      kv.probe(df, keyColumn, predName)
+      kv.probeBins(df, binColumns, predName)
 
     /** Collect-once driver-local scorer for single-row / low-latency
       * paths (the reference's standalone trie, transpiler.py:3117-3215):

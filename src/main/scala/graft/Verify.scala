@@ -1,9 +1,24 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal: escapes backslash, quote, and ALL control
+    * chars (<0x20) — a tab or CR in hand-written oracle SQL would
+    * otherwise make json.load of oracle_sql.json fail and silently
+    * drop every correctness result. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     // args: sfDir outDir [substring...] — optional substrings restrict
     // the run to matching query names (local iteration; the driver
@@ -24,36 +39,29 @@ object Verify {
       outRoot.listFiles().foreach(rm)
     }
     outRoot.mkdirs()
+    // failed queries: name -> error text, dumped to errors.json
+    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.foreach { case (name, fn) =>
       if (selected(name))
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+        catch { case NonFatal(e) =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          errors(name) = e.toString
         }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // a name-filtered (local-iteration) run dumps oracles only for the
     // queries it actually wrote — a full oracle map over a partial
     // outDir would reference parquet that doesn't exist
     val json = SparkEntry.oracleSql.filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // manifest of EVERY declared query, so the checker can flag a query
     // that crashed (no output dir) instead of silently skipping it
-    val manifest = SparkEntry.queries.keys.toSeq.sorted.map(q).mkString("[", ",", "]")
+    val manifest = SparkEntry.queries.keys.toSeq.sorted.map(jsonString).mkString("[", ",", "]")
     Files.writeString(Paths.get(s"$outDir/queries.json"), manifest)
+    Files.writeString(Paths.get(s"$outDir/errors.json"),
+      errors.map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }.mkString("{", ",", "}"))
     spark.stop()
   }
 }

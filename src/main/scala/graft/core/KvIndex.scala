@@ -47,13 +47,20 @@ object Aggregates {
   * precomputed aggregate table at build time. The probe then takes one
   * of two bitwise-identical forms ([[KvProbeSpec]] pins them):
   *
-  *  - **compiled** (default, index ≤ [[KvModel.MaxCompiledEntries]]
-  *    entries): the collected maps embed in the plan as a reference
-  *    object ([[graft.plans.KvScorerRef]], like the kNN/tree kernels)
-  *    and the whole cascade is ONE whole-stage-codegen projection —
-  *    zero joins, zero exchanges on the probe side at any input size;
-  *  - **join cascade** (indexes too large to embed): BROADCAST hash
-  *    joins + one coalesce — fully parallel, no iteration, and the only
+  *  - **compiled** ([[KvModel.probeBins]], index ≤
+  *    [[KvModel.MaxCompiledEntries]] entries): the collected maps embed
+  *    in the plan as primitive open-addressing tables keyed by PACKED
+  *    bin codes ([[graft.plans.KvCodeRef]], like the kNN/tree kernels);
+  *    the row's bin indices pack into one `long` with per-field radix
+  *    `1 + max(field)` and the whole cascade is ONE whole-stage-codegen
+  *    projection — no key string, zero joins, zero exchanges on the
+  *    probe side at any input size. Compiles only when every index key
+  *    parses as a canonical non-negative decimal tuple of its level's
+  *    length (every bin-built index does) and the radix product stays
+  *    below 2^63;
+  *  - **join cascade** (string keys via [[KvModel.probe]], and indexes
+  *    too large to embed or that do not compile): BROADCAST hash joins
+  *    + one coalesce — fully parallel, no iteration, and the only
   *    shuffle in the whole serve path is whatever the caller's plan
   *    already needed.
   *
@@ -79,9 +86,10 @@ final case class KvModel(
     kv.select(col("key"), col("value")).as[Types.KVEntry]
   }
 
-  /** The embedded-cascade kernel when the index fits the size cap —
-    * collected ONCE per model (the tables are cached + key-space-
-    * bounded), then reused by every probe this model serves.
+  /** The packed-code kernel when the index fits the size cap and
+    * compiles ([[graft.plans.KvCodeRef.compile]]) — collected ONCE per
+    * model (the tables are cached + key-space-bounded), then reused by
+    * every probe this model serves.
     *
     * r16 (guide §1.2/§5 — fewer driver jobs per model build): the old
     * size probe COUNTED kv + every prefix table (up to keyLen driver
@@ -94,36 +102,49 @@ final case class KvModel(
     * falls back to the join cascade. The compiled/join DECISION is
     * unchanged (total entries ≤ cap) and the two paths are bitwise
     * identical anyway (KvProbeSpec), so no declared result can move. */
-  @transient private lazy val compiledRef: Option[graft.plans.KvScorerRef] = {
+  @transient private lazy val compiledRef: Option[graft.plans.KvCodeRef] = {
     val kvN = kvCountHint.getOrElse(kv.count())
     if (kvN > maxCompiledEntries) None
     else {
       val local = toLocalScorer
       val entries = local.kv.size.toLong +
         local.prefixes.iterator.map(_._2.size.toLong).sum
-      if (entries <= maxCompiledEntries) Some(new graft.plans.KvScorerRef(local))
+      if (entries <= maxCompiledEntries) graft.plans.KvCodeRef.compile(local, keyLen)
       else None
     }
   }
 
-  /** Append `predName` to `input` by probing the index with `key`.
-    * Exact hit wins; else the longest non-empty prefix aggregate; else
-    * the global aggregate (trie-root DFS, inference_trie.py:91-98).
-    * Compiled single-projection form when the index fits
-    * [[maxCompiledEntries]]; broadcast-join cascade otherwise — same
-    * values bit for bit either way (a NULL key resolves to the global
-    * aggregate on both paths).
+  /** Append `predName` to `input` by probing the index with the key's
+    * LongType bin indices `bins`, in key order. Exact hit wins; else
+    * the longest non-empty prefix aggregate; else the global aggregate
+    * (trie-root DFS, inference_trie.py:91-98). Compiled packed-code
+    * projection when the index compiles (see the class doc); the
+    * broadcast-join cascade over [[Keys.keyColumn]] otherwise — same
+    * values bit for bit either way, and a NULL bin resolves to the
+    * global aggregate on both.
     */
-  def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
+  def probeBins(input: DataFrame, bins: Seq[Column], predName: String = "prediction"): DataFrame = {
+    require(bins.length == keyLen, s"expected $keyLen bin columns, got ${bins.length}")
     compiledRef match {
-      case Some(ref) =>
-        input.withColumn(predName,
-          coalesce(graft.plans.KvProbe.column(key, ref), lit(globalValue)))
-      case None => joinProbe(input, key, predName)
+      case Some(ref) => input.withColumn(predName, graft.plans.KvProbe.column(bins, ref))
+      case None =>
+        // concat_ws skips NULLs ("1.2" from (1, NULL, 2)): make the key
+        // NULL instead, so it misses every table like the compiled form
+        val anyNull = bins.map(_.isNull).reduce(_ || _)
+        joinProbe(input,
+          when(anyNull, lit(null).cast("string")).otherwise(Keys.keyColumn(bins)), predName)
     }
+  }
 
-  /** The broadcast-join cascade form of [[probe]] (always correct; the
-    * scale path for indexes too large to embed in the task binary). */
+  /** Append `predName` to `input` by probing the index with a STRING
+    * `key` ('.'-joined bin indices) — the broadcast-join cascade; a
+    * NULL key resolves to the global aggregate. Bin-built keys should
+    * go through [[probeBins]], the only entry to the compiled kernel. */
+  def probe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame =
+    joinProbe(input, key, predName)
+
+  /** The broadcast-join cascade (always correct; the scale path for
+    * indexes too large to embed in the task binary). */
   def joinProbe(input: DataFrame, key: Column, predName: String = "prediction"): DataFrame = {
     val keyed = input.withColumn("__key", key)
     val exact = keyed.join(

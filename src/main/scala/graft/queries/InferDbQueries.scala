@@ -44,9 +44,10 @@ object InferDbQueries {
   private val targetSql = "(CASE WHEN l_returnflag = 'R' THEN 1.0 ELSE 0.0 END)"
   private def targetCol = when(col("l_returnflag") === "R", 1.0).otherwise(0.0)
 
-  private def keyCol: Column = Keys.keyColumn(keyFields.map { case (c, s) =>
+  private def keyBins: Seq[Column] = keyFields.map { case (c, s) =>
     NumericBins(s.toArray).toColumn(col(c))
-  })
+  }
+  private def keyCol: Column = Keys.keyColumn(keyBins)
 
   // linear model constants (features: qty, extprice/1000, disc, tax)
   private val linCoefs     = Array(0.031, -0.0045, 1.7, -0.9)
@@ -83,7 +84,7 @@ object InferDbQueries {
   /** Probe the full lineitem table with `model`, rounded to 6 decimals
     * — the declared serve shape shared by the probe-family queries. */
   private def probeAll(s: SparkSession, d: String, model: KvModel): DataFrame =
-    model.probe(Tables.lineitem(s, d), keyCol, "prediction")
+    model.probeBins(Tables.lineitem(s, d), keyBins, "prediction")
       .select(col("l_orderkey"), col("l_linenumber"),
         round(col("prediction"), 6).as("prediction"))
 
@@ -106,7 +107,7 @@ object InferDbQueries {
       val train = li.filter(trainPred)
         .select(keyCol.as("key"), targetCol.as("pred"))
       val model = KvIndexBuilder.buildFromKeyed(train, keyLen = 3, Task.Classification)
-      model.probe(li, keyCol, "prediction")
+      model.probeBins(li, keyBins, "prediction")
         .select(round(col("prediction"), 6).as("p"), targetCol.as("y"))
         .select(
           least(floor(col("p") * 100).cast("long"), lit(99L)).as("bin"),
@@ -167,7 +168,7 @@ object InferDbQueries {
       val train = li.filter(trainPred)
         .select(keyCol.as("key"), targetCol.as("pred"))
       val model = KvIndexBuilder.buildFromKeyed(train, keyLen = 3, Task.Classification)
-      model.probe(li, keyCol, "prediction")
+      model.probeBins(li, keyBins, "prediction")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("prediction"), 6).as("prediction"))
     }),
@@ -181,7 +182,7 @@ object InferDbQueries {
         .select(keyCol.as("key"), targetCol.as("pred"))
       val model = KvIndexBuilder.buildFromKeyed(
         train, keyLen = 3, Task.Classification, balanceRatio = Some(2.5))
-      model.probe(li, keyCol, "prediction")
+      model.probeBins(li, keyBins, "prediction")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("prediction"), 6).as("prediction"))
     }),
@@ -361,7 +362,7 @@ object InferDbQueries {
           least(lit(1.0), (col("b0") * 3 + col("b1") * 2 + col("b2")) * 0.05).as("pred"))
       val model = KvIndexBuilder.buildFromKeyed(
         train.unionByName(populated), keyLen = 3, Task.Classification)
-      model.probe(li, keyCol, "prediction")
+      model.probeBins(li, keyBins, "prediction")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("prediction"), 6).as("prediction"))
     }),
@@ -391,7 +392,7 @@ object InferDbQueries {
         when(col("l_orderkey") % 10 === 0, lit(null)).otherwise(col("l_quantity")).as("l_quantity"),
         when(col("l_orderkey") % 7 === 0, lit(null)).otherwise(col("l_discount")).as("l_discount"),
         col("l_tax"))
-      model.probe(dirty, keyCol, "prediction")
+      model.probeBins(dirty, keyBins, "prediction")
         .select(col("l_orderkey"), col("l_linenumber"),
           round(col("prediction"), 6).as("prediction"))
     }),

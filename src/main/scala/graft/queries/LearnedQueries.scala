@@ -1551,7 +1551,7 @@ object LearnedQueries {
         .option("maxFilesPerTrigger", 1).parquet(stageDir)
       val q = StreamOps.foreachBatchSink(
         stream,
-        batch => model.probe(batch, streamKeyCol, "prediction")
+        batch => model.probeBins(batch, streamKeyBins, "prediction")
           .select(col("user_id"), col("event_type"), col("value"),
             round(col("prediction"), 6).as("prediction")),
         (scored, _) => scored.write.mode("append").parquet(outDir))
@@ -1602,7 +1602,7 @@ object LearnedQueries {
       val model = state.get()
         .getOrElse(throw new IllegalStateException("stream produced no batches"))
         .toModel()
-      model.probe(events, streamKeyCol, "prediction")
+      model.probeBins(events, streamKeyBins, "prediction")
         .select(col("user_id"), col("event_type"), col("value"),
           round(col("prediction"), 6).as("prediction"))
     })
@@ -1611,9 +1611,10 @@ object LearnedQueries {
   // stream-probe key: (user_id mod 4, value bin); training drops value
   // bin 3 (value >= 30) so high-value probe rows exercise the prefix
   // fallback through the streaming path too.
-  private def streamKeyCol = Keys.keyColumn(Seq(
+  private def streamKeyBins = Seq(
     NumericBins(Array(1.0, 2.0, 3.0)).toColumn(col("user_id") % 4),
-    NumericBins(Array(10.0, 20.0, 30.0)).toColumn(col("value"))))
+    NumericBins(Array(10.0, 20.0, 30.0)).toColumn(col("value")))
+  private def streamKeyCol = Keys.keyColumn(streamKeyBins)
 
   private val P = 1000000007L
   // mirrors Multimodal.fromDocuments' ASCII sanitization (byte-fold ==

@@ -395,6 +395,9 @@ class PipelineSpec extends AnyFunSuite {
       val rddDf = spark.createDataFrame(df.rdd, df.schema)
       val compiled = fitted.transform(rddDf, "p").queryExecution.executedPlan.toString
       assert(compiled.contains("kv_probe"), compiled.take(800))
+      // translate fuses into the probe: no key string on the serve path
+      assert(!compiled.contains("concat_ws") && !compiled.contains("AS STRING"),
+        s"compiled serve must probe packed bin codes:\n$compiled")
       assert(!compiled.contains("Join") && !compiled.contains("Exchange"),
         s"compiled serve must be a pure projection:\n$compiled")
       // join-cascade path (indexes above the embed cap), forced via the cap
